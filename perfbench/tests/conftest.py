@@ -1,0 +1,13 @@
+"""Put the benchmark's modules and the repository root on the path."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.dirname(HERE)
+ROOT = os.path.dirname(BENCH)
+for p in (BENCH, ROOT):
+    if p not in sys.path:
+        sys.path.insert(0, p)

@@ -143,18 +143,36 @@ def write_jsonl(rows: list[dict], path: str) -> None:
             f.write("\n")
 
 
-def make_day(spark, ds: str, n_users: int, seed: int, out_dir: str) -> tuple[str, dict]:
-    """Generate, corrupt and write one day; returns (path, injected counts)."""
+def make_days(
+    spark, days: list[tuple[str, int]], n_users: int, out_dir: str
+) -> list[tuple[str, dict]]:
+    """Generate, corrupt and write each ``(date, seed)`` day, all in one
+    Spark job; returns (path, injected counts) per day."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
     from ecommerce_event_pipeline_spark.schemas import EVENT_SCHEMA
     from ecommerce_event_pipeline_spark.sources.generator import generate_events
 
     names = [f.name for f in EVENT_SCHEMA.fields]
-    table = generate_events(spark, ds, n_users=n_users, seed=seed).select(*names).toArrow()
-    rows = sorted(table.to_pylist(), key=lambda r: (r["timestamp"], r["event_id"]))
-    rows, counts = inject_defects(rows, seed)
-    path = os.path.join(out_dir, f"events_{ds.replace('-', '')}.jsonl")
-    write_jsonl(rows, path)
-    return path, counts
+    frames = [
+        generate_events(spark, ds, n_users=n_users, seed=seed).select(
+            F.lit(k).alias("_day"), *names
+        )
+        for k, (ds, seed) in enumerate(days)
+    ]
+    by_day: list[list[dict]] = [[] for _ in days]
+    for r in reduce(lambda a, b: a.unionByName(b), frames).toArrow().to_pylist():
+        by_day[r.pop("_day")].append(r)
+    out = []
+    for (ds, seed), rows in zip(days, by_day):
+        rows.sort(key=lambda r: (r["timestamp"], r["event_id"]))
+        rows, counts = inject_defects(rows, seed)
+        path = os.path.join(out_dir, f"events_{ds.replace('-', '')}.jsonl")
+        write_jsonl(rows, path)
+        out.append((path, counts))
+    return out
 
 
 _EVENTS_SQL = """

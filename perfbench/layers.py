@@ -62,6 +62,7 @@ LAYER_METRICS = {
     "streaming.state_commit_s": "s",
     "streaming.state_rows": "count",
     "streaming.state_mem_mb": "MB",
+    "jvm_peak_rss_mb": "MB",
     "trace_overhead_frac": "ratio",
     "host_other_cpu_frac": "ratio",
 }

@@ -88,7 +88,7 @@ def test_a_tiny_day_passes_its_checks_and_tampering_is_caught(spark, tmp_path):
     from probe import Probe
     from workloads import Unit
 
-    path, injected = daily.make_day(spark, "2026-03-05", 300, 9, str(tmp_path))
+    ((path, injected),) = daily.make_days(spark, [("2026-03-05", 9)], 300, str(tmp_path))
     expected = daily.expected_marts(path)
     assert expected["raw_events"][0] > 100
     unit = Unit("2026-03-05", "day", ("2026-03-05", path, injected))

@@ -220,14 +220,14 @@ def test_benchmark_json_matches_what_the_runs_print():
     import run
     from conftest import ROOT
     from ecommerce_event_pipeline_spark.registry import queries
-    from workloads import GRADED
+    from workloads import WORKLOADS
 
     path = os.path.join(ROOT, "BENCHMARK.json")
     if not os.path.exists(path):
         pytest.skip("no BENCHMARK.json next to perfbench/")
     with open(path) as f:
         spec = json.load(f)
-    assert [w["name"] for w in spec["workloads"]] == list(GRADED)
+    assert [w["name"] for w in spec["workloads"]] == list(WORKLOADS)
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     listed = [(m["name"], m["unit"]) for m in spec["per_layer"]]
     names = run.all_layer_metrics(queries())
